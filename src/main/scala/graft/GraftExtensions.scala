@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BloomFilterAgg, BloomMightContain, CmsEstimate, DotProductD, GraftFunctions, HeavyHitters, L2NormD, LangMarkerBest, MinHashLanes, NfcNormalize, PolyFingerprint, SimHash64}
+import graft.functions.{BloomFilterAgg, BloomMightContain, CmsEstimate, DotProductD, GraftFunctions, HeavyHitters, L2NormD, LangMarkerBest, MinHashLanes, NfcNormalize, NgramHashes, PolyFingerprint, SimHash64}
 
 /** Standard Spark extension packaging: enables graft's native functions
   * in ANY session via configuration —
@@ -51,6 +51,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     (FunctionIdentifier("graft_minhash_lanes"),
       info("graft_minhash_lanes", "graft_minhash_lanes(shingles) - 64 MinHash lane minima"),
       arity("graft_minhash_lanes", 1)(es => MinHashLanes(es.head))),
+    (FunctionIdentifier("graft_ngram_hashes"),
+      info("graft_ngram_hashes",
+        "graft_ngram_hashes(tokens, n) - sorted distinct xxhash64 of the word n-grams"),
+      arity("graft_ngram_hashes", 2)(es =>
+        NgramHashes(es(0), GraftFunctions.foldableInt("graft_ngram_hashes n", es(1))))),
     (FunctionIdentifier("graft_fingerprint"),
       info("graft_fingerprint", "graft_fingerprint(s) - rolling polynomial hash of a string"),
       arity("graft_fingerprint", 1)(es => PolyFingerprint(es.head))),

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Connected components over a near-duplicate pair graph by iterative
   * min-label propagation — turns pairwise matches into duplicate-cluster
@@ -48,48 +49,88 @@ object ConnectedComponents {
 
   /** Edge count at or below which [[labels]]/[[labelsStar]] take the
     * driver union-find early exit instead of the iterative distributed
-    * loop. 2²² edges = two longs each ≈ 64 MB collected — the same
-    * data-to-driver class as a broadcast hash join's build side, for a
-    * structure (path-compressed union-find) that labels the graph in
-    * one pass instead of diameter (resp. log²) ROUNDS of join + agg +
-    * checkpoint jobs. A near-dup pair graph at 100 TB exceeds the
-    * threshold and runs the distributed loop unchanged; when it does
-    * NOT — duplicate clusters are rare relative to corpus size more
-    * often than not — collecting beats scheduling dozens of
-    * cluster-wide shuffles over KB of edges. Callers that must pin the
-    * distributed path (specs of the loop itself) pass
+    * loop. The driver holds at most ~48 bytes per edge
+    * ([[unionFindLabels]]: 16 for the collected endpoint pairs, 16 for
+    * the sorted endpoint array while its distinct copy of ≤ 16 is made,
+    * ≤ 8 for the int parents), ≈ 200 MB at 2²² edges, plus the
+    * 16-byte-per-edge serialized task results while the collect lands
+    * — the same data-to-driver class as a broadcast hash join's
+    * build side, for a structure (path-compressed union-find) that
+    * labels the graph in one pass instead of diameter (resp. log²)
+    * ROUNDS of join + agg + checkpoint jobs. A near-dup pair graph at
+    * 100 TB exceeds the threshold and runs the distributed loop
+    * unchanged; when it does NOT — duplicate clusters are rare relative
+    * to corpus size more often than not — collecting beats scheduling
+    * dozens of cluster-wide shuffles over KB of edges. Callers that
+    * must pin the distributed path (specs of the loop itself) pass
     * `smallCollectMax = 0`.
     */
   val DriverUnionFindMaxEdges: Long = 1L << 22
 
   /** Driver union-find over a collected edge list (id_a, id_b) —
-    * the small-graph early exit. Union-by-min keeps each tree's root
-    * at the component's minimum id, so `find` IS the label; path
-    * compression makes the whole pass O(E α(E)). Output contract is
-    * exactly [[labels]]': (id, label = min reachable id), one row per
-    * node with at least one edge.
+    * the small-graph early exit. Each partition ships its edges as ONE
+    * flat primitive array (a₀ b₀ a₁ b₁ …), not a Row per edge. Node
+    * ids are mapped to dense indices by binary search over their sorted
+    * distinct array; union-by-min keeps each tree's root at the
+    * component's minimum index — its minimum id — so `find` IS the
+    * label; path compression makes the whole pass O(E log E). The
+    * labels are emitted from a broadcast of the id and root arrays
+    * (12 bytes a node), so no per-row object is built on the driver.
+    * Output contract is exactly [[labels]]': (id, label = min reachable
+    * id), one row per node with at least one edge.
     */
   private def unionFindLabels(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val parent = new scala.collection.mutable.LongMap[Long]()
-    def find(x: Long): Long = {
+    val chunks = edges.select(col("id_a"), col("id_b")).as[(Long, Long)]
+      .mapPartitions { it =>
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { case (x, y) => b += x; b += y }
+        Iterator.single(b.result())
+      }.collect()
+    // sorted distinct node ids; a node's index in it is its dense id
+    val ids = {
+      val ends = new Array[Long](chunks.map(_.length).sum)
+      var k = 0
+      chunks.foreach { c => System.arraycopy(c, 0, ends, k, c.length); k += c.length }
+      java.util.Arrays.sort(ends)
+      var d = 0
+      k = 0
+      while (k < ends.length) {
+        if (d == 0 || ends(k) != ends(d - 1)) { ends(d) = ends(k); d += 1 }
+        k += 1
+      }
+      java.util.Arrays.copyOf(ends, d)
+    }
+    val n = ids.length
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
       r
     }
-    edges.collect().foreach { row =>
-      val a = row.getLong(0)
-      val b = row.getLong(1)
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a)
-      val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    chunks.foreach { c =>
+      var i = 0
+      while (i < c.length) {
+        val ra = find(index(c(i)))
+        val rb = find(index(c(i + 1)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        i += 2
+      }
     }
-    parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("id", "label")
+    (0 until n).foreach(i => parent(i) = find(i))
+    val b = spark.sparkContext.broadcast((ids, parent))
+    val out = spark.createDataset(spark.sparkContext.range(0, n).map { i =>
+      val (id, root) = b.value
+      (id(i.toInt), id(root(i.toInt)))
+    }).toDF("id", "label")
+    // an RDD-backed frame has no size estimate, so a join would shuffle
+    // it; hint it for broadcast when its 16 bytes a row fit the
+    // planner's own threshold, as the estimate of a local table would
+    if (16L * n <= SQLConf.get.autoBroadcastJoinThreshold) broadcast(out) else out
   }
 
   /** (id, label) for every node of `edges` (columns id_a, id_b); label =

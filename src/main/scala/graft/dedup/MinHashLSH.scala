@@ -7,18 +7,31 @@ import graft.text.TextOps
 /** MinHash + banded LSH near-duplicate detection.
   *
   * Pipeline (each step one distributed pass, no driver-side data):
-  *  1. shingle: word n-grams per doc (distinct).
-  *  2. signature: 64 minhash lanes — lane i = min over shingles of
-  *     `xxhash64(i, shingle)` (64 independent partial-aggregatable `min`s
-  *     in ONE groupBy, i.e. one shuffle keyed by doc id).
+  *  1. hash: each doc's word n-grams as a sorted, distinct `array<long>`
+  *     of their xxHash64 values ([[hashed]], one native pass per row via
+  *     `graft_ngram_hashes`; no gram strings are built). This table is
+  *     materialised once and every later step reads it.
+  *  2. signature: 64 minhash lanes — lane i = min over the n-gram hashes
+  *     h of `a_i·h + b_i`, all lanes folded in one map-only pass
+  *     (graft.functions.MinHashLanes). The lanes over the hashes equal
+  *     the lanes over the gram strings, since both hash with xxHash64
+  *     seed 42.
   *  3. band: NumBands bands of LanesPerBand lanes; band hash =
   *     xxhash64 of the band's lanes.
   *  4. candidates: self-join on (band_id, band_hash) — the shuffle key is
   *     uniform hash output, so at 100 TB this join is skew-free unless
   *     a band bucket is genuinely a giant duplicate cluster (then AQE
   *     skew-join splits it).
-  *  5. verify: exact Jaccard on candidate pairs only, via each doc's
-  *     shingle set (array_intersect/array_union — codegen'd).
+  *  5. verify: Jaccard on candidate pairs only, over the hash sets of
+  *     step 1: |A∩B| from `array_intersect` on the long arrays and
+  *     |A∪B| = |A| + |B| − |A∩B|.
+  *
+  * Exactness of step 5. Distinct grams with equal 64-bit hashes would
+  * merge and move a Jaccard. For a pair, the chance that any two of the
+  * |A∪B| distinct grams collide is at most C(|A∪B|, 2) / 2⁶⁴ — about
+  * 1.5·10⁻¹⁵ at |A∪B| = 240, the union of two 120-gram docs. DedupSpec
+  * holds the output to a verify on the gram strings, as a set of
+  * (id_a, id_b, jaccard).
   *
   * Band geometry tunes the S-curve. 16 bands × 4 lanes: P(candidate)
   * at true Jaccard s is 1-(1-s⁴)¹⁶ — ≈ 1-4·10⁻⁸ at s = 0.9, ≈ 0.988
@@ -33,13 +46,15 @@ object MinHashLSH {
   val NumBands = 16
   val LanesPerBand: Int = NumLanes / NumBands
 
-  /** (id, shingles) with empty-shingle docs dropped. Tokenization is
+  /** (doc_id, shingles) with empty-shingle docs dropped: the gram
+    * STRINGS, for callers that keep or compare them (MinHashIndex
+    * persists them; Decontaminate joins on them). Tokenization is
     * bound to an attribute first so the shifted-slice zip_with in
     * wordNgrams (which references the token array n+1 times) consumes
     * an attribute, not a re-evaluated derived expression — the SURVEY
     * §8 higher-order-function pitfall.
-    */
-  /** NOTE on fan-out placement: the scan-parallelism floor
+    *
+    * NOTE on fan-out placement: the scan-parallelism floor
     * (graft.util.Fanout) is applied by the CORPUS-scale entry points
     * ([[nearDuplicates]], [[pairRecallOn]], [[MinHashIndex.build]]),
     * NOT here — shingled is also the per-batch gateway of the probe
@@ -55,17 +70,32 @@ object MinHashLSH {
         TextOps.wordNgrams(col("graft_toks"), n).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
+  /** (doc_id, hs): the same docs and grams as [[shingled]], each gram
+    * as its xxhash64 — `hs` is the sorted, distinct `array<long>` of
+    * `graft_ngram_hashes`. Same fan-out placement as [[shingled]].
+    */
+  def hashed(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs
+      .select(col(idCol).as("doc_id"),
+        call_function("graft_ngram_hashes", TextOps.tokens(col(textCol)), lit(n))
+          .as("hs"))
+      .filter(size(col("hs")) > 0)
+  }
+
   /** (doc_id, lanes array<long>) minhash signatures — MAP-ONLY: all 64
     * lanes fold in one native pass per row (graft.functions
     * .MinHashLanes), so nothing shuffles until the band join. The
     * explode + 64-min-agg formulation this replaces shuffled every
     * (doc, shingle) pair — the dominant data movement of the whole
-    * dedup pipeline at corpus scale.
+    * dedup pipeline at corpus scale. `shingleCol` holds either the
+    * gram strings ([[shingled]]) or their hashes ([[hashed]]); both
+    * give the same lanes.
     */
-  def signatures(sh: DataFrame): DataFrame = {
+  def signatures(sh: DataFrame, shingleCol: String = "shingles"): DataFrame = {
     graft.functions.GraftFunctions.register(sh.sparkSession)
     sh.select(col("doc_id"),
-      call_function("graft_minhash_lanes", col("shingles")).as("lanes"))
+      call_function("graft_minhash_lanes", col(shingleCol)).as("lanes"))
   }
 
   /** (doc_id, band_id, band_hash) — NumBands rows per doc, still
@@ -92,31 +122,28 @@ object MinHashLSH {
       .distinct()
   }
 
-  /** Candidates with exact Jaccard ≥ tau, verified on true shingle sets.
+  /** Candidates with Jaccard ≥ tau, verified on the n-gram hash sets
+    * (step 5 of the object doc, with its collision bound).
     * Output: (id_a, id_b, jaccard rounded to 4).
     */
   def nearDuplicates(docs: DataFrame, idCol: String, textCol: String,
       n: Int, tau: Double): DataFrame = {
     // corpus-scale self-dedup: floor the scan parallelism before the
-    // tokenize -> shingle -> minhash derivation (see shingled's note)
-    val sh = shingled(graft.util.Fanout.ensure(docs), idCol, textCol, n)
-    // share the BAND table, not the shingle table: the bands are 16
-    // narrow (doc, band, hash) rows per doc, but each side of the
-    // candidates self-join otherwise re-runs the whole tokenize →
-    // shingle → minhash derivation. The shingle table itself stays
-    // unshared — measured in r2: the wide distinct-ngram arrays cost
-    // more to cache than to recompute for the two verify-side joins.
-    // The share is a lazy localCheckpoint, not Dataset.persist: same
-    // in-plan block reuse, but no CacheManager entry pinning the blocks
-    // for the session lifetime (graft.util.Caches has the lifecycle).
-    val bandDf = bands(signatures(sh)).localCheckpoint(false)
-    val cand = candidates(bandDf)
-    val shA = sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
-    val shB = sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cand.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 4))
+    // tokenize -> hash derivation (see shingled's note). The hash table
+    // is shared by the band side and both verify sides: one tokenize
+    // and hash pass per doc. The share is a lazy localCheckpoint, not
+    // Dataset.persist: same in-plan block reuse, but no CacheManager
+    // entry pinning the blocks for the session lifetime
+    // (graft.util.Caches has the lifecycle).
+    val hs = hashed(graft.util.Fanout.ensure(docs), idCol, textCol, n)
+      .localCheckpoint(false)
+    val cand = candidates(bands(signatures(hs, "hs")))
+    val hsA = hs.select(col("doc_id").as("id_a"), col("hs").as("hs_a"))
+    val hsB = hs.select(col("doc_id").as("id_b"), col("hs").as("hs_b"))
+    cand.join(hsA, "id_a").join(hsB, "id_b")
+      .withColumn("ni", size(array_intersect(col("hs_a"), col("hs_b"))))
+      .withColumn("jaccard", round(col("ni").cast("double") /
+        (size(col("hs_a")) + size(col("hs_b")) - col("ni")).cast("double"), 4))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
@@ -171,13 +198,10 @@ object MinHashLSH {
     // Σ_g df(g)² over sample shingles instead of n²·(array ops): a
     // first probe of the cartesian spelling measured 32 s at sf0.1
     // (the Jaccard predicate lands inside the nested-loop join
-    // condition); this shape is sub-second. Shingles are hashed to
-    // longs map-side (the hashGrams lesson) so the posting join
-    // shuffles 8-byte keys, not trigram strings.
-    val sh = shingled(sample, idCol, textCol, n)
-      .select(col("doc_id"),
-        array_distinct(transform(col("shingles"), g => xxhash64(g)))
-          .as("hs"))
+    // condition); this shape is sub-second. The posting join keys on
+    // the same n-gram hashes nearDuplicates verifies on ([[hashed]]),
+    // so it shuffles 8-byte keys, not trigram strings.
+    val sh = hashed(sample, idCol, textCol, n)
       .withColumn("sz", size(col("hs")))
       .localCheckpoint(false)
     val posts = sh.select(col("doc_id"), col("sz"), explode(col("hs")).as("g"))

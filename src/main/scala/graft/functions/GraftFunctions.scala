@@ -16,6 +16,8 @@ object GraftFunctions {
     "graft_l2norm" -> { case Seq(a) => L2NormD(a) },
     "graft_simhash64" -> { case Seq(a) => SimHash64(a) },
     "graft_minhash_lanes" -> { case Seq(a) => MinHashLanes(a) },
+    "graft_ngram_hashes" -> { case Seq(a, n) =>
+      NgramHashes(a, foldableInt("graft_ngram_hashes n", n)) },
     "graft_fingerprint" -> { case Seq(a) => PolyFingerprint(a) },
     "graft_heavy_hitters" -> { case Seq(a, k) =>
       HeavyHitters(a, foldableCapacity(k)).toAggregateExpression() },

@@ -44,6 +44,63 @@ class DedupSpec extends SparkSpec {
       s"LSH missed ${exact -- lsh}, spurious ${lsh -- exact}")
   }
 
+  /** The verify nearDuplicates is held to, on the gram STRINGS: the
+    * candidates of the string-shingle signatures, Jaccard from
+    * array_intersect / array_union over the strings.
+    */
+  private def stringVerified(docs: org.apache.spark.sql.DataFrame, n: Int,
+      tau: Double): Set[(Long, Long, Double)] = {
+    val sh = MinHashLSH.shingled(docs, "doc_id", "text", n)
+    val cand = MinHashLSH.candidates(MinHashLSH.bands(MinHashLSH.signatures(sh)))
+    val a = sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
+    val b = sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
+    cand.join(a, "id_a").join(b, "id_b")
+      .withColumn("j", round(
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 4))
+      .filter(col("j") >= tau)
+      .select("id_a", "id_b", "j").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  }
+
+  private def triples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("nearDuplicates on n-gram hashes equals the string verify: sf corpus") {
+    val docs = graft.util.Tables(spark, sf).documents
+    for (tau <- Seq(0.7, 0.5)) {
+      val want = stringVerified(docs, 3, tau)
+      val got = triples(MinHashLSH.nearDuplicates(docs, "doc_id", "text", 3, tau))
+      assert(want.nonEmpty, s"tau=$tau: corpus should contain near-dups")
+      assert(got === want, s"tau=$tau: missed ${want -- got}, spurious ${got -- want}")
+    }
+  }
+
+  test("nearDuplicates on n-gram hashes equals the string verify: UTF-8 corpus") {
+    import spark.implicits._
+    val vocab = Seq("größe", "café", "naïve", "日本語", "テキスト", "слово", "ёж",
+      "🙂", "καλημέρα", "ﬁne", "straße", "zürich", "mañana", "Ωmega", "čaj",
+      "حرف", "עברית", "中文", "한국어", "ação") ++ (0 until 40).map(i => s"w$i")
+    val rnd = new scala.util.Random(11)
+    val base = (0 until 80).map { i =>
+      i.toLong -> Seq.fill(20 + rnd.nextInt(25))(vocab(rnd.nextInt(vocab.size)))
+    }
+    // near-copies: 1-4 token substitutions; plus docs shorter than n
+    val copies = base.take(40).map { case (i, toks) =>
+      val edited = (0 until 1 + rnd.nextInt(4)).foldLeft(toks) { (t, _) =>
+        t.updated(rnd.nextInt(t.size), vocab(rnd.nextInt(vocab.size)))
+      }
+      (1000L + i) -> edited
+    }
+    val short = Seq(2000L -> Seq("日本語"), 2001L -> Seq("café", "🙂"), 2002L -> Seq.empty[String])
+    val docs = (base ++ copies ++ short).map { case (i, t) => (i, t.mkString(" ")) }
+      .toDF("doc_id", "text")
+    val want = stringVerified(docs, 3, 0.5)
+    val got = triples(MinHashLSH.nearDuplicates(docs, "doc_id", "text", 3, 0.5))
+    assert(want.exists(_._3 < 1.0), "the fixture must hold inexact near-dups")
+    assert(got === want, s"missed ${want -- got}, spurious ${got -- want}")
+  }
+
   test("NgramJaccard equals brute-force exact pairs") {
     val docs = graft.util.Tables(spark, sf).documents
     // uncapped maxDf to match the query layer's regime: with the default
@@ -1328,6 +1385,42 @@ class DedupSpec extends SparkSpec {
       val page = "/page/(\\d+)".r.findFirstMatchIn(g._1).get.group(1).toLong
       assert(g._2 === ids.filter(_ % 97 == page).min,
         s"keep_id must be the min doc_id of the page's members: $g")
+    }
+  }
+
+  test("ConnectedComponents: the driver union-find (smallCollectMax = E) and " +
+    "the distributed loop (E - 1) give identical labels") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+    // canonical (id_a < id_b), distinct and loop-free, so labels and
+    // labelsStar both count E = 22 edges: a 6-hop path, a 5-clique, a
+    // star and a lone edge
+    val path = (1L until 7L).map(i => (i, i + 1))
+    val clique = for (a <- 20L to 24L; b <- a + 1 to 24L) yield (a, b)
+    val star = (31L to 35L).map(l => (30L, l))
+    val planted = path ++ clique ++ star ++ Seq((40L, 41L))
+    val edges = planted.toDF("id_a", "id_b")
+    val e = planted.size.toLong
+    val expected = planted.flatMap { case (a, b) => Seq(a, b) }.distinct.map { id =>
+      id -> (if (id <= 7) 1L else if (id <= 24) 20L else if (id <= 35) 30L else 40L)
+    }.toMap
+    def run(labels: Long => org.apache.spark.sql.DataFrame, max: Long,
+        driver: Boolean): Map[Long, Long] = {
+      val df = labels(max)
+      val plan = df.queryExecution.analyzed
+      assert(plan.collectFirst { case r: ExternalRDD[_] => r }.isDefined === driver &&
+        plan.collectFirst { case r: LogicalRDD => r }.isDefined === !driver,
+        s"smallCollectMax=$max took the wrong path:\n$plan")
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val cc = graft.dedup.ConnectedComponents
+    for ((name, f) <- Seq[(String, Long => org.apache.spark.sql.DataFrame)](
+        "labels" -> (m => cc.labels(edges, smallCollectMax = m)),
+        "labelsStar" -> (m => cc.labelsStar(edges, smallCollectMax = m)))) {
+      val onDriver = run(f, e, driver = true)
+      val distributed = run(f, e - 1, driver = false)
+      assert(onDriver === distributed, name)
+      assert(onDriver === expected, name)
     }
   }
 

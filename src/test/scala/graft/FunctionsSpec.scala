@@ -1,7 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{GraftFunctions, MinHashLanes, NgramHashes}
+import graft.text.TextOps
 
 class FunctionsSpec extends SparkSpec {
 
@@ -207,5 +214,101 @@ class FunctionsSpec extends SparkSpec {
     }
     assert(err.getMessage.toLowerCase.contains("binary"),
       s"expected a BINARY type error, got: ${err.getMessage}")
+  }
+
+  // texts for the n-gram hash specs: UTF-8 tokens, empty and blank text,
+  // docs shorter than n, repeated grams, a NULL text
+  private val ngramTexts = Seq(
+    "Größe café naïve 日本語 テキスト слово ёж 🙂 emoji",
+    "", "   ", "one", "two words", "three little words",
+    "a b a b a b a b", "x x x x x x", "the cat sat on the mat the cat sat",
+    null)
+
+  /** Both evaluation paths of one expression over a bound array input:
+    * `eval` (interpreted) and a generated projection (codegen).
+    */
+  private def bothPaths(e: Expression, in: Any): (Any, Any) = {
+    val row = InternalRow(in)
+    val interp = e.eval(row)
+    val gen = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+    (interp, if (gen.isNullAt(0)) null else gen.getArray(0))
+  }
+
+  private def longs(a: Any): Seq[Long] =
+    if (a == null) null
+    else a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
+
+  test("graft_ngram_hashes equals sorted distinct xxhash64 over wordNgrams, " +
+    "interpreted and codegen") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val df = ngramTexts.toDF("t").withColumn("toks", TextOps.tokens(col("t")))
+    for (n <- 1 to 4) {
+      val rows = df.select(col("toks"),
+        call_function("graft_ngram_hashes", col("toks"), lit(n)).as("native"),
+        array_sort(array_distinct(transform(TextOps.wordNgrams(col("toks"), n),
+          g => xxhash64(g)))).as("ref"))
+        .collect()
+      assert(rows.length === ngramTexts.length)
+      rows.foreach { r =>
+        val ref = Option(r.getSeq[Long](2)).map(_.toSeq).orNull
+        assert(Option(r.getSeq[Long](1)).map(_.toSeq).orNull === ref,
+          s"n=$n toks=${r.get(0)}")
+        val toks = Option(r.getSeq[String](0)).map(ts =>
+          new GenericArrayData(ts.map(UTF8String.fromString).toArray[Any])).orNull
+        val (interp, gen) = bothPaths(
+          NgramHashes(BoundReference(0, ArrayType(StringType), nullable = true), n), toks)
+        assert(longs(interp) === ref, s"interpreted n=$n toks=${r.get(0)}")
+        assert(longs(gen) === ref, s"codegen n=$n toks=${r.get(0)}")
+      }
+      // the fixture really covers the edge cases at this n
+      val sizes = rows.flatMap(r => Option(r.getSeq[Long](2)).map(_.size))
+      assert(sizes.contains(0), s"n=$n: no gram-less doc")
+      val grams = rows.flatMap(r => Option(r.getSeq[String](0)).map(_.size - n + 1))
+      assert(grams.zip(sizes).exists { case (g, d) => d < g }, s"n=$n: no repeated gram")
+    }
+  }
+
+  test("graft_minhash_lanes over graft_ngram_hashes equals the lanes over " +
+    "the gram strings") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val df = ngramTexts.toDF("t").withColumn("toks", TextOps.tokens(col("t")))
+    for (n <- 1 to 4) {
+      val rows = df.select(
+        call_function("graft_minhash_lanes",
+          call_function("graft_ngram_hashes", col("toks"), lit(n))).as("hashed"),
+        call_function("graft_minhash_lanes",
+          TextOps.wordNgrams(col("toks"), n)).as("strings"),
+        call_function("graft_ngram_hashes", col("toks"), lit(n)).as("hs"))
+        .collect()
+      rows.foreach { r =>
+        val strings = Option(r.getSeq[Long](1)).map(_.toSeq).orNull
+        assert(Option(r.getSeq[Long](0)).map(_.toSeq).orNull === strings, s"n=$n")
+        // the long-input branch agrees on both evaluation paths too
+        val hs = Option(r.getSeq[Long](2)).map(h => new GenericArrayData(h.toArray[Any])).orNull
+        val (interp, gen) = bothPaths(
+          MinHashLanes(BoundReference(0, ArrayType(LongType, containsNull = false),
+            nullable = true)), hs)
+        assert(longs(interp) === strings, s"interpreted n=$n")
+        assert(longs(gen) === strings, s"codegen n=$n")
+      }
+    }
+  }
+
+  test("graft_ngram_hashes is SQL-callable and rejects junk arguments") {
+    GraftFunctions.register(spark)
+    val r = spark.sql(
+      "SELECT graft_ngram_hashes(array('a', 'b', 'c'), 2) AS hs").head()
+    assert(r.getSeq[Long](0) === Seq("a b", "b c")
+      .map(g => spark.sql(s"SELECT xxhash64('$g')").head().getLong(0)).sorted)
+    val nonFoldable = intercept[Exception] {
+      spark.sql("SELECT graft_ngram_hashes(array('a'), cast(id AS int)) FROM range(1)").head()
+    }
+    assert(nonFoldable.getMessage.contains("literal"), nonFoldable.getMessage)
+    val badType = intercept[Exception] {
+      spark.sql("SELECT graft_ngram_hashes(array(1, 2), 1)").head()
+    }
+    assert(badType.getMessage.contains("array<string>"), badType.getMessage)
   }
 }
